@@ -27,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   * per-query maps are several KB, so the JSON line start was always
   * truncated away. stdout gets ONE compact line (< 1 KB): the engine
   * total, the total including the deliberately-stock A/B baselines
-  * (x01 lambda-fold, x05 stock top-k, x13 range-join as-of), and a
+  * (x01 lambda-fold, x13 range-join as-of), and a
   * headline subset of per-query steady times. The complete
   * per-iteration record goes to BENCH_FULL.json.
   */
@@ -47,11 +47,11 @@ object Bench {
     "x02_knn_codegen", "x03_knn_ivf")
 
   /** Deliberately-unoptimized comparison arms of the A/B pairs
-    * (x01 vs x02, x05 vs x04, x13 vs x12, x19 vs t13, x20 vs t04).
+    * (x01 vs x02, x13 vs x12, x19 vs t13, x20 vs t04).
     * They exist to show the win, and belong in the artifact, but not
     * in the engine's headline total. */
   private[graft] val AbBaselines =
-    Set("x01_knn_lambda", "x05_topk_stock", "x13_asof_rangejoin",
+    Set("x01_knn_lambda", "x13_asof_rangejoin",
       "x19_repetition_exploded", "x20_shingles_hof", "x34_video_repair")
 
   // ---- telemetry probes (deltas computed around each iteration) ----
@@ -462,23 +462,26 @@ object Bench {
       val (gcMs0, gcN0) = gcStats()
       val cpu0 = processCpuMs()
       val host0 = hostCpuMs()
-      @volatile var result = -1.0
-      val worker = new Thread(() => {
-        val t0 = System.nanoTime()
-        try {
-          // job group is per-thread state — set it in the worker so
-          // cancelJobGroup reaches exactly this iteration's jobs
-          spark.sparkContext.setJobGroup(group, name,
-            interruptOnCancel = true)
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          result = (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => () } // result stays -1.0
-        finally spark.sparkContext.clearJobGroup()
-      }, group)
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(capSec * 1000L)
-      val sec =
+      // conf hygiene: A/B builders (x09/x10 bloom join, x22/x23
+      // salting, x27 split size) pin session flags; the scope puts the
+      // session conf back so none leaks into later queries
+      val sec = GraftSession.withConfs(spark) {
+        @volatile var result = -1.0
+        val worker = new Thread(() => {
+          val t0 = System.nanoTime()
+          try {
+            // job group is per-thread state — set it in the worker so
+            // cancelJobGroup reaches exactly this iteration's jobs
+            spark.sparkContext.setJobGroup(group, name,
+              interruptOnCancel = true)
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            result = (System.nanoTime() - t0) / 1e9
+          } catch { case _: Throwable => () } // result stays -1.0
+          finally spark.sparkContext.clearJobGroup()
+        }, group)
+        worker.setDaemon(true)
+        worker.start()
+        worker.join(capSec * 1000L)
         if (worker.isAlive) {
           System.err.println(s"[bench] $name exceeded ${capSec}s — cancelling")
           spark.sparkContext.cancelJobGroup(group)
@@ -487,7 +490,7 @@ object Bench {
             // a worker that survives job-group cancellation is wedged in
             // driver-side code (plan/codegen/collect): interrupt it and
             // wait again — an abandoned-but-running zombie would overlap
-            // the next iteration's jobs and race the conf unset below,
+            // the next iteration's jobs and race the conf restore,
             // skewing every subsequent timing
             worker.interrupt()
             worker.join(30000L)
@@ -499,9 +502,7 @@ object Bench {
           }
           -2.0
         } else result
-      // conf hygiene: A/B builders (x04/x05 kNN rewrite, x09/x10 bloom
-      // join) pin session flags; reset so none leaks into later queries
-      graft.queries.BenchSuite.PinnedConfKeys.foreach(spark.conf.unset)
+      }
       val (gcMs1, gcN1) = gcStats()
       val cpu1 = processCpuMs()
       val host1 = hostCpuMs()

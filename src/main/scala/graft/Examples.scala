@@ -75,8 +75,7 @@ object Examples {
         col("vec_id"))
       .limit(3)
     knn.select("vec_id").show()
-    println("knn plan: " + (if (knn.queryExecution.executedPlan.toString
-      .contains("KnnTopKGlobal")) "KnnTopK rewrite" else "stock"))
+    knn.explain()
 
     // --- training-data prep (round 5): pack, dedupe, decontaminate ---
     val withTok = docs.select(col("doc_id"),

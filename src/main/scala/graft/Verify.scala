@@ -48,8 +48,13 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // conf hygiene: builders may pin session flags — the scope puts
+      // the session conf back so one query's flag never leaks into the
+      // next
+      try GraftSession.withConfs(spark) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         val msg = s"${e.getClass.getSimpleName}: ${e.getMessage}"
         System.err.println(s"[verify] $name failed: $msg")
@@ -58,11 +63,6 @@ object Verify {
         d.mkdirs()
         Files.writeString(Paths.get(s"$outDir/$name/_ERROR"), msg)
       }
-      // conf hygiene: builders may pin session flags (x04/x05 and
-      // x09/x10 A/Bs, v08) — reset so one query's flag never leaks
-      // into the next
-      finally graft.queries.BenchSuite.PinnedConfKeys
-        .foreach(spark.conf.unset)
     }
     val errJson = errors
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

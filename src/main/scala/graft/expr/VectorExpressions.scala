@@ -878,11 +878,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }
         Md5Long(es(0), nHex)
       }))
-    // whole-operator kNN: ORDER BY <vector distance> LIMIT k →
-    // KnnTopK (eval-once bounded heaps; see graft.plans.KnnTopK)
-    ext.injectOptimizerRule(graft.plans.KnnTopKRewrite)
-    // registered-index cell pruning on top of the KnnTopK rewrite
+    // registered-index cell pruning under ORDER BY l2_distance LIMIT k
     ext.injectOptimizerRule(graft.plans.IvfPruneRule)
-    ext.injectPlannerStrategy(graft.plans.KnnTopKStrategy)
   }
 }

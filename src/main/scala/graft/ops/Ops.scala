@@ -44,33 +44,15 @@ object Ops {
   }
 
   /** Per-group top-k (generalized O1): partitioned window, never a
-    * global sort; ties broken by the caller's order columns. */
+    * global sort; ties broken by the caller's order columns. Spark
+    * plans the rank filter as a partial WindowGroupLimit before the
+    * window's shuffle, so each map task pre-prunes to k rows per group
+    * even when the groups are few. */
   def topKPerGroup(df: DataFrame, partitionCols: Seq[String],
       orderBy: Seq[Column], k: Int, rankCol: String = "rank"): DataFrame = {
     val w = Window.partitionBy(partitionCols.map(col): _*).orderBy(orderBy: _*)
     df.withColumn(rankCol, row_number().over(w))
       .filter(col(rankCol) <= k)
-  }
-
-  /** Per-group top-k for LOW-CARDINALITY groups (a handful of
-    * languages/categories over a 100 TB corpus): the plain partitioned
-    * window funnels each group through ONE task, so parallelism equals
-    * group count. Two levels instead: rows are hashed into `buckets`
-    * sub-groups, each (group, bucket) takes a local top-k (parallelism
-    * = groups × buckets), and the final window ranks only the ≤ k ×
-    * buckets survivors per group. Identical output to [[topKPerGroup]]
-    * whenever `orderBy` is a total order within the group (each global
-    * top-k row is by definition in its bucket's top-k). */
-  def topKPerGroupScalable(df: DataFrame, partitionCols: Seq[String],
-      orderBy: Seq[Column], k: Int, rankCol: String = "rank",
-      buckets: Int = 64): DataFrame = {
-    val pre = df.withColumn("__b",
-      pmod(hash(df.columns.map(col): _*), lit(buckets)))
-    val w1 = Window.partitionBy((partitionCols :+ "__b").map(col): _*)
-      .orderBy(orderBy: _*)
-    val pruned = pre.withColumn("__r1", row_number().over(w1))
-      .filter(col("__r1") <= k).drop("__r1", "__b")
-    topKPerGroup(pruned, partitionCols, orderBy, k, rankCol)
   }
 
   /** Per-group top-k as a mergeable AGGREGATE

@@ -3,18 +3,18 @@ package graft.plans
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, EqualTo, Expression, In, InSet, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, EqualTo, Expression, In, InSet, IntegerLiteral, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 import graft.expr.L2Distance
 
-/** IVF cell pruning for the declarative kNN idiom — the second half of
-  * the SURVEY §7.4 strategy: once [[KnnTopKRewrite]] has turned
-  * `ORDER BY l2_distance(vec, q) LIMIT k` into [[KnnTopK]], this rule
-  * narrows the scan to the query's `nprobe` nearest IVF cells when the
-  * corpus carries a REGISTERED cell-assignment column.
+/** IVF cell pruning for the declarative kNN idiom
+  * `ORDER BY l2_distance(vec, q) LIMIT k` — Spark's own
+  * `Limit(Sort)` shape, which it plans as TakeOrderedAndProject. When
+  * the corpus carries a REGISTERED cell-assignment column, this rule
+  * narrows the scan to the query's `nprobe` nearest IVF cells.
   *
   * Opt-in and explicitly approximate: registering an index
   * ([[KnnIvfCatalog.register]]) is the user's declaration that
@@ -28,10 +28,10 @@ import graft.expr.L2Distance
   * Mechanics: the probe cells are computed DRIVER-side from the sort
   * key's literal query vector against the registered centroids (tiny,
   * by construction), and injected as `Filter(cell IN (...))` directly
-  * above the KnnTopK child. Catalyst's own PushDownPredicates then
-  * carries the filter to the scan, where a `partitionBy(cell)` layout
-  * turns it into real partition pruning — at 100 TB the query reads
-  * `nprobe` directories, not the corpus.
+  * below the Sort. Catalyst's own PushDownPredicates then carries the
+  * filter to the scan, where a `partitionBy(cell)` layout turns it
+  * into real partition pruning — at 100 TB the query reads `nprobe`
+  * directories, not the corpus.
   */
 object KnnIvfCatalog {
   /** One registered index: centroid set + probe width, keyed by the
@@ -126,29 +126,41 @@ case class IvfPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => false
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+  /** The head sort key, seen through one level of Project aliasing
+    * (the distance projected as a column just below the Sort). */
+  private def resolveHead(key: Expression, child: LogicalPlan): Expression =
+    (key, child) match {
+      case (a: Attribute, Project(projectList, _)) =>
+        projectList.collectFirst {
+          case al: Alias if al.toAttribute.semanticEquals(a) => al.child
+        }.getOrElse(key)
+      case _ => key
+    }
+
+  /** `sort` with the probe-cell filter under it, or None when the plan
+    * is not a registered nearest-neighbor top-k (or is already pruned). */
+  private def prune(sort: Sort): Option[Sort] = {
+    val head = sort.order.head
     // nearest-neighbor shapes only: ascending distance. A descending
     // sort (farthest points) must stay exact — nearest-cell probes
     // would return categorically wrong rows.
-    case k @ KnnTopK(_, order, child)
-        if order.head.direction == Ascending =>
-      val pruned = for {
-        cellAttr <- child.output.find(a => lookup(a.name).isDefined)
-        if !alreadyPruned(child, cellAttr)
-        meta <- lookup(cellAttr.name)
-        q <- queryVector(order.head.child).orElse(
-          // aliased form: distance projected one level below the sort
-          child match {
-            case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-              p.projectList.collectFirst {
-                case al: org.apache.spark.sql.catalyst.expressions.Alias
-                    if order.head.child.references.contains(al.toAttribute) =>
-                  queryVector(al.child)
-              }.flatten
-            case _ => None
-          })
-        lits <- cellLiterals(cellAttr, probeCells(meta, q))
-      } yield k.copy(child = Filter(In(cellAttr, lits), child))
-      pruned.getOrElse(k)
+    if (!sort.global || head.direction != Ascending) return None
+    for {
+      cellAttr <- sort.child.output.find(a => lookup(a.name).isDefined)
+      if !alreadyPruned(sort.child, cellAttr)
+      meta <- lookup(cellAttr.name)
+      q <- queryVector(resolveHead(head.child, sort.child))
+      lits <- cellLiterals(cellAttr, probeCells(meta, q))
+    } yield sort.copy(child = Filter(In(cellAttr, lits), sort.child))
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+    case l @ Limit(k @ IntegerLiteral(_), s: Sort) =>
+      prune(s).map(Limit(k, _)).getOrElse(l)
+    // the `sort.limit.select` shape: Catalyst pushes the final
+    // projection below the limit, landing it between Limit and Sort
+    case l @ Limit(k @ IntegerLiteral(_), p @ Project(projectList, s: Sort))
+        if projectList.forall(_.deterministic) =>
+      prune(s).map(ps => Limit(k, p.copy(child = ps))).getOrElse(l)
   }
 }

@@ -14,12 +14,12 @@ import graft.vector.{ProductQuantizer, VectorSearch}
   * path.
   *
   * Registry split (so the correctness record is structurally 100%-able):
-  *  - `suite` — the deterministic production arms (x02, x04, x07, x08);
+  *  - `suite` — the deterministic production arms (x02, x04, x07, x11);
   *    each carries a DuckDB oracle like every other query. Their double
   *    distances cross-check exactly because both engines fold the
   *    squared diffs sequentially over exact float→double casts.
   *  - `benchOnly` — the deliberately-stock A/B baselines (x01 lambda,
-  *    x05 stock top-k, x10 bloom-off), the flag-dependent bloom arm
+  *    x10 bloom-off), the flag-dependent bloom arm
   *    (x09: identical output to x10 by construction, the PLAN is the
   *    assertion — PlanSpec), and the not-cross-engine-reproducible
   *    internals (x03's k-means IVF, x06's Spark sketch builtins).
@@ -231,24 +231,16 @@ object BenchSuite extends QuerySuite {
             lit(0L), (a, x) => a + x).as("n_chars"))
     })
 
-  /** x04/x05 — the KnnTopK rewrite A/B ([[graft.plans.KnnTopKRewrite]]):
-    * the INLINE pgvector idiom `orderBy(l2_distance(vec, q)).limit(k)`,
-    * where stock Spark's TakeOrderedAndProject re-evaluates the distance
-    * expression inside every heap comparison (O(d·log k) per row) while
-    * the rewrite evaluates it once per row. Same plan text either side;
-    * only the session flag differs. */
-  private def topkInline(s: SparkSession, dir: String,
-      rewrite: Boolean): DataFrame = {
-    // flag read at optimization time, i.e. when Bench materializes the
-    // returned frame — set here so each variant times its own operator
-    s.conf.set("spark.graft.knnTopK.enabled", rewrite.toString)
+  /** x04 — the INLINE pgvector idiom `orderBy(l2_distance(vec, q))
+    * .limit(k)` over the inflated corpus, planned by stock Spark as
+    * TakeOrderedAndProject. */
+  private def topkInline(s: SparkSession, dir: String): DataFrame = {
     val qvec = Tables(s, dir, "embeddings").filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>"))
       .collect().head.getSeq[Double](0).toIndexedSeq
     // project the vec column away AFTER the limit: the driver's
     // rows-only check loads the result into pandas, which cannot sort
-    // array cells (round-4 x04/x05 errored on exactly that); the
-    // rewrite matches the sort.limit.select shape either way
+    // array cells (round-4 x04 errored on exactly that)
     inflated(s, dir)
       .orderBy(
         call_function("graft_l2_distance", col("vec"), typedLit(qvec)),
@@ -257,9 +249,6 @@ object BenchSuite extends QuerySuite {
       .select(col("id"))
   }
 
-  /** The A/B arms produce identical rows by construction; the oracle
-    * rides the rewrite arm (the production path), the stock arm stays
-    * bench-only. */
   private val topkInlineSql =
     s"""WITH c AS ($inflatedSql),
     p AS (SELECT embedding AS pemb FROM embeddings WHERE vec_id = 0)
@@ -268,12 +257,8 @@ object BenchSuite extends QuerySuite {
 
   private val x04 = GraftQuery(
     "x04_topk_rewrite",
-    (s, dir) => topkInline(s, dir, rewrite = true),
+    (s, dir) => topkInline(s, dir),
     Some(topkInlineSql))
-
-  private val x05 = GraftQuery(
-    "x05_topk_stock",
-    (s, dir) => topkInline(s, dir, rewrite = false))
 
   /** x06 — Spark's own sketch builtins (SURVEY §2.5 "free if we expose
     * them"), rows-only checked: HLL++ approx_count_distinct and
@@ -291,12 +276,12 @@ object BenchSuite extends QuerySuite {
             .as("approx_median"),
           count(lit(1)).as("n")))
 
-  /** x07/x08 — the two-level top-k A/B on a LOW-cardinality group
-    * (one lang-like key from the full lineitem): direct per-group
-    * window vs [[graft.ops.Ops.topKPerGroupScalable]]. With 3 groups
-    * over 600k counted rows the direct form sorts each group in ONE
-    * task; the two-level form fans the pre-prune across 64 buckets.
-    * Output (top-5 per group) is identical — rows-only checked. */
+  /** x07/x11 — per-group top-k on a LOW-cardinality group (one
+    * lang-like key from the full lineitem): the per-group window vs
+    * the grouped bounded-heap aggregate. With 3 groups over 600k
+    * counted rows the window's partial WindowGroupLimit pre-prunes
+    * each map task to 5 rows per group before the shuffle. Output
+    * (top-5 per group) is identical. */
   private def grouped(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "lineitem")
       .select(col("l_returnflag").as("g"),
@@ -304,8 +289,8 @@ object BenchSuite extends QuerySuite {
       .groupBy("g", "item")
       .agg(count(lit(1)).as("cnt"))
 
-  /** Both arms emit identical rows (the two-level prune is lossless for
-    * a total order) — the shared integer-exact oracle checks each. */
+  /** Both arms emit identical rows (the order is total) — the shared
+    * integer-exact oracle checks each. */
   private val groupedTopkSql =
     """SELECT g, item, cnt,
       CAST(row_number() OVER (PARTITION BY g ORDER BY cnt DESC, item ASC)
@@ -322,16 +307,9 @@ object BenchSuite extends QuerySuite {
       .withColumn("rank", col("rank").cast("long")),
     Some(groupedTopkSql))
 
-  private val x08 = GraftQuery(
-    "x08_topk_twolevel",
-    (s, dir) => graft.ops.Ops.topKPerGroupScalable(grouped(s, dir),
-      Seq("g"), Seq(col("cnt").desc, col("item").asc), 5)
-      .withColumn("rank", col("rank").cast("long")),
-    Some(groupedTopkSql))
-
-  /** x11 — third arm of the same A/B: the grouped bounded-heap
-    * AGGREGATE ([[graft.ops.Ops.topKPerGroupAgg]]). Unlike both window
-    * forms it shuffles NOTHING group-sized: partial ObjectHashAggregate
+  /** x11 — second arm of the same A/B: the grouped bounded-heap
+    * AGGREGATE ([[graft.ops.Ops.topKPerGroupAgg]]). Unlike the window
+    * form it shuffles NOTHING group-sized: partial ObjectHashAggregate
     * reduces each partition to ≤ 3 groups × 5 pairs map-side. Identical
     * rows, same oracle. */
   private val x11 = GraftQuery(
@@ -372,21 +350,6 @@ object BenchSuite extends QuerySuite {
         sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double")
           .as("revenue"))
   }
-
-  /** Session keys the A/B builders pin; Bench/Verify unset them after
-    * every query so a variant's flag never leaks into the next plan. */
-  val PinnedConfKeys: Seq[String] = Seq(
-    "spark.graft.knnTopK.enabled",
-    "spark.sql.optimizer.runtime.bloomFilter.enabled",
-    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-    "spark.sql.autoBroadcastJoinThreshold",
-    "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    // x22/x23 disable AQE's own skew mitigation so the salting A/B
-    // isolates the manual technique; unset falls back to the default
-    // (true), which is also what the GraftSession builder pins
-    "spark.sql.adaptive.skewJoin.enabled",
-    // x27 splits its ~100 MB bench-scale index into task-sized chunks
-    "spark.sql.files.maxPartitionBytes")
 
   private val x09 = GraftQuery(
     "x09_bloom_join",
@@ -457,28 +420,16 @@ object BenchSuite extends QuerySuite {
     * (`tools/StreamProfile`, PERFORMANCE.md "x21 profile"). Stateful
     * streaming partitions must be sized to STATE VOLUME (target tens
     * of MB per partition), not to core count; 8 partitions hold to
-    * sf1 (~140 MB state → ~17 MB each) and cut x21 3.2×. Override with
-    * SPARK_GRAFT_STREAM_STATE_PARTITIONS when benching a fixture whose
-    * watermark-horizon state outgrows that. */
-  private val streamStateParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-
+    * sf1 (~140 MB state → ~17 MB each) and cut x21 3.2×. */
   private def streamArm(name: String,
       build: (SparkSession, DataFrame) => org.apache.spark.sql.Dataset[_],
       extraConfs: Map[String, String] = Map.empty)
       : GraftQuery =
-    GraftQuery(name, (s, dir) => {
-      val confs = extraConfs +
-        ("spark.sql.shuffle.partitions" -> streamStateParts)
-      val saved = confs.keys.map(k =>
-        k -> scala.util.Try(s.conf.get(k)).toOption).toMap
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try streamArmBody(s, dir, build)
-      finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
-    })
+    GraftQuery(name, (s, dir) =>
+      graft.GraftSession.withConfs(s,
+          extraConfs + ("spark.sql.shuffle.partitions" -> "8")) {
+        streamArmBody(s, dir, build)
+      })
 
   private def streamArmBody(s: SparkSession, dir: String,
       build: (SparkSession, DataFrame) => org.apache.spark.sql.Dataset[_])
@@ -588,7 +539,7 @@ object BenchSuite extends QuerySuite {
           explode(shinglesHof(tokens(col("text")), 2)).as("bigram"))
         .groupBy("lang", "bigram")
         .agg(count(lit(1)).as("cnt"))
-      graft.ops.Ops.topKPerGroupScalable(counted, Seq("lang"),
+      graft.ops.Ops.topKPerGroup(counted, Seq("lang"),
           Seq(col("cnt").desc, col("bigram").asc), 5, "rnk")
         .withColumn("rnk", col("rnk").cast("long"))
     })
@@ -713,8 +664,9 @@ object BenchSuite extends QuerySuite {
     * into 1-2 input tasks — the per-pair verify then runs effectively
     * single-threaded (76 s warm). At 100 TB the layout provides task
     * granularity naturally; here the arm pins a 4 MB split so the
-    * measurement exercises the intended parallel shape (Bench unsets
-    * the key after every query via [[PinnedConfKeys]]). */
+    * measurement exercises the intended parallel shape (Bench restores
+    * the session conf after every query via
+    * [[graft.GraftSession.withConfs]]). */
   private val vdiMemo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), (String, Seq[(Long, Seq[Double])])]
   private val x27 = GraftQuery("x27_vector_dedup_probe",
@@ -1074,13 +1026,13 @@ object BenchSuite extends QuerySuite {
     })
 
   override val suite: Seq[GraftQuery] =
-    Seq(x02, x04, x07, x08, x11)
+    Seq(x02, x04, x07, x11)
 
   /** Timed by Bench, asserted by PlanSpec where a plan property is the
     * point (x09/x10), but excluded from Verify/CORRECTNESS: baselines
     * and engine-internal results with no cross-engine oracle. */
   val benchOnly: Seq[GraftQuery] =
-    Seq(x01, x03, x05, x06, x09, x10, x12, x13, x14, x15, x16, x17, x18,
+    Seq(x01, x03, x06, x09, x10, x12, x13, x14, x15, x16, x17, x18,
       x19, x20, x21, x22, x23, x24, x25, x26, x27, x28, x29, x30, x31,
       x32, x33, x34, x35, x36)
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** Phase-level profile of the m03_video_admit_probe lifecycle arm —
   * r18 measurement harness (guide §1: isolate the expensive query,
   * attribute time operator by operator before changing anything).
-  * Run: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.M03Profile"
+  * Run: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.queries.M03Profile"
   */
 object M03Profile {
   def main(args: Array[String]): Unit = {

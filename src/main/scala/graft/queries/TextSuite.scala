@@ -123,15 +123,16 @@ object TextSuite extends QuerySuite {
           explode(shingles(tokens(col("text")), 2)).as("bigram"))
         .groupBy("lang", "bigram")
         .agg(count(lit(1)).as("cnt"))
-      // two-level top-k: |langs| is tiny, so a single per-lang window
-      // would bound parallelism by the language count at any scale.
-      // Measured choice vs Ops.topKPerGroupAggStr (the grouped
-      // bounded-heap aggregate): the input here is the ALREADY-REDUCED
-      // (lang, bigram) vocabulary, where the Tungsten window sort beats
-      // the string-item udaf's per-row decode (1.6 s vs 2.3 s at
-      // sf0.1); the aggregate form wins when the ranked input is
-      // raw-corpus-scale (see c10, and x11 vs x07/x08 for long items)
-      graft.ops.Ops.topKPerGroupScalable(counted, Seq("lang"),
+      // per-lang window top-k: Spark inserts a partial WindowGroupLimit
+      // before the window's shuffle, so each map task pre-prunes to k
+      // rows per lang even though |langs| is tiny. Measured choice vs
+      // Ops.topKPerGroupAggStr (the grouped bounded-heap aggregate):
+      // the input here is the ALREADY-REDUCED (lang, bigram)
+      // vocabulary, where the Tungsten window sort beats the
+      // string-item udaf's per-row decode (1.6 s vs 2.3 s at sf0.1);
+      // the aggregate form wins when the ranked input is
+      // raw-corpus-scale (see c10, and x11 vs x07 for long items)
+      graft.ops.Ops.topKPerGroup(counted, Seq("lang"),
           Seq(col("cnt").desc, col("bigram").asc), 5, "rnk")
         .withColumn("rnk", col("rnk").cast("long"))
     },

@@ -284,17 +284,14 @@ object VectorSuite extends QuerySuite {
     WHERE a.vec_id <> 42 QUALIFY rnk <= 3"""))
 
   /** v08 — the declarative pgvector idiom `ORDER BY l2_distance(v, q)
-    * LIMIT k` (ref `generate_embeddings.py:418-452`), left for the
-    * [[graft.plans.KnnTopKRewrite]] optimizer rule to take over: the
-    * executed plan is a KnnTopKLocal/Global pair (PlanSpec-asserted),
-    * not a Sort — distances evaluated once per row into bounded heaps.
-    * Quantized vectors keep the distance sums exact cross-engine. */
+    * LIMIT k` (ref `generate_embeddings.py:418-452`) with the distance
+    * projected as a column, so Spark's TakeOrderedAndProject compares a
+    * precomputed double (PlanSpec-asserted: one bounded-heap top-k, no
+    * Sort). Quantized vectors keep the distance sums exact
+    * cross-engine. */
   private val v08 = GraftQuery(
     "v08_topk_rewrite",
     (s, dir) => {
-      // self-contained: the rewrite must drive this query even if a
-      // sibling bench query toggled the session flag off
-      s.conf.set("spark.graft.knnTopK.enabled", "true")
       val corpus = emb(s, dir)
         .select(col("vec_id"), col("qv").cast("array<double>").as("qvd"))
       val qvec: Seq[Double] = corpus.filter(col("vec_id") === 0)

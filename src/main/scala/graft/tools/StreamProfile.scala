@@ -40,16 +40,10 @@ object StreamProfile {
     spark.sparkContext.setLogLevel("WARN")
     for (v <- variants if wanted(v.name)) {
       // session confs are sticky: set this variant's, reset after
-      val saved = v.confs.keys.map(k =>
-        k -> scala.util.Try(spark.conf.get(k)).toOption).toMap
-      v.confs.foreach { case (k, c) => spark.conf.set(k, c) }
-      try {
+      graft.GraftSession.withConfs(spark, v.confs) {
         // one warm + two timed, matching the bench's median-of-iters
         val times = (0 until 3).map(_ => runOnce(spark, sfDir, v.name))
         println(s"== ${v.name} wall(s): ${times.map(t => f"$t%.2f").mkString(", ")}")
-      } finally saved.foreach {
-        case (k, Some(c)) => spark.conf.set(k, c)
-        case (k, None)    => spark.conf.unset(k)
       }
     }
     spark.stop()

@@ -144,28 +144,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("two-level top-k equals the direct window on random groups") {
-    val gen = Gen.zip(
-      Gen.listOfN(120, Gen.zip(Gen.choose(0, 3), Gen.choose(0, 1000))),
-      Gen.choose(2, 16))
-    forAll(gen, n = 5) { case (data, buckets) =>
-      whenever(data.nonEmpty) {
-        // unique v per (g, v) row set => total order => exact equality
-        val df = data.distinct.zipWithIndex
-          .map { case ((g, v), i) => (g, v, i) }.toDF("g", "v", "i")
-        val direct = Ops.topKPerGroup(df, Seq("g"),
-          Seq(col("v").desc, col("i").asc), 5)
-          .select("g", "v", "i", "rank")
-          .as[(Int, Int, Int, Int)].collect().toSet
-        val scalable = Ops.topKPerGroupScalable(df, Seq("g"),
-          Seq(col("v").desc, col("i").asc), 5, buckets = buckets)
-          .select("g", "v", "i", "rank")
-          .as[(Int, Int, Int, Int)].collect().toSet
-        assert(scalable == direct)
-      }
-    }
-  }
-
   test("two-phase prefix sum equals the window form on random weights") {
     import org.apache.spark.sql.expressions.Window
     val gen = Gen.zip(

@@ -36,9 +36,9 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("the registry is at its committed size (catches silent drops)") {
-    assert(SparkEntry.queries.size === 175,
+    assert(SparkEntry.queries.size === 174,
       s"oracle surface moved: ${SparkEntry.queries.size} (update the docs!)")
-    assert(SparkEntry.benchOnlyQueries.size === 31,
+    assert(SparkEntry.benchOnlyQueries.size === 30,
       s"bench arms moved: ${SparkEntry.benchOnlyQueries.size}")
   }
 }
@@ -116,8 +116,8 @@ class RegistryShapeSpec extends SparkSpec {
     * to tie there, then red the first time a tie straddles rank k (v13
     * hit this only at sf1). EmbeddingPipeline.search fixed its own
     * instance with rank()<=k with-ties; the other global top-k
-    * operators on the oracle surface (TakeOrderedAndProject and the
-    * KnnTopK rewrite — v08/x04/r14 family) must instead be TOTAL
+    * operators on the oracle surface (TakeOrderedAndProject — the
+    * v08/x04/r14 family) must instead be TOTAL
     * orders: a tiebreak key after the value key makes the selected set
     * unique regardless of ties, at every scale. Pin it structurally:
     * no single-key global top-k node may appear in any oracle-surface
@@ -128,19 +128,40 @@ class RegistryShapeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, run) =>
-        try {
+        GraftSession.withConfs(spark) {
           run(spark, dir).queryExecution.sparkPlan.collect {
             case t: TakeOrderedAndProjectExec if t.sortOrder.size < 2 =>
               s"$name: TakeOrderedAndProject(${t.sortOrder.mkString(", ")})"
-            case k: graft.plans.KnnTopKExec if k.order.size < 2 =>
-              s"$name: KnnTopK(${k.order.mkString(", ")})"
           }
-        } finally graft.queries.BenchSuite.PinnedConfKeys
-          .foreach(spark.conf.unset)
+        }
     }
     assert(offenders.isEmpty,
       s"single-key global top-k can straddle a tie group at some SF " +
         s"(the v13 class) — add a unique tiebreak to the orderBy in " +
         s"both engines: " + offenders.mkString("; "))
+  }
+
+  /** Query builders pin session flags (bloom thresholds, broadcast off,
+    * split sizes, streaming partitions) that the optimizer reads when
+    * the plan is built; [[GraftSession.withConfs]] is what keeps one
+    * query's flags out of the next query's plan in Verify and Bench. */
+  test("no registry query leaks session conf past withConfs") {
+    val registry = SparkEntry.queries ++ SparkEntry.benchOnlyQueries
+    var pinned = Set.empty[String]
+    val leaks = registry.toSeq.sortBy(_._1).flatMap { case (name, run) =>
+      val before = spark.conf.getAll
+      GraftSession.withConfs(spark) {
+        run(spark, dir).queryExecution.sparkPlan
+        if (spark.conf.getAll != before) pinned += name
+      }
+      val after = spark.conf.getAll
+      if (after == before) None
+      else Some(s"$name: ${(after.toSet diff before.toSet).mkString(", ")}" +
+        s" / lost ${(before.toSet diff after.toSet).mkString(", ")}")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+    // the sweep is not vacuous: the flag-pinning builders were seen
+    assert(Set("x09_bloom_join", "x22_salted_join", "x27_vector_dedup_probe")
+      .subsetOf(pinned), pinned)
   }
 }

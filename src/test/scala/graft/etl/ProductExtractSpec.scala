@@ -322,6 +322,10 @@ class ProductExtractSpec extends SparkSpec {
     // the reference's crawl loop accumulates an append-mode CSV
     // (test_products_scraping.py:38-49); the streaming twin runs the
     // SAME pure extractor per micro-batch via foreachBatch
+    // resolve the site before the stream starts: an `assume` thrown
+    // inside foreachBatch surfaces as a StreamingQueryException (a
+    // failure) instead of canceling the test
+    val breadtalk = site("breadtalk")
     val spark0 = spark
     import spark0.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -337,7 +341,7 @@ class ProductExtractSpec extends SparkSpec {
       .createTempDirectory("graft-extract-cp").toString
     val q = graft.streaming.EventStreams.transformSink(
       mem.toDF.toDF("url", "html", "category_url"),
-      batch => productsFromHtml(batch, site("breadtalk"),
+      batch => productsFromHtml(batch, breadtalk,
         categoryUrlCol = Some("category_url")).toDF(),
       out, cp)
     q.awaitTermination()

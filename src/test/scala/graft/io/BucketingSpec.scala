@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 
 /** Co-located join via bucketing: same key, same bucket count → the
   * join plans with NO Exchange on either side (each task reads the
@@ -21,20 +21,11 @@ import graft.SparkSpec
   */
 class BucketingSpec extends SparkSpec {
 
-  private val pinned = Seq(
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-    "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
-
-  private def withPlanConfs[A](body: => A): A = {
-    val prev = pinned.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pinned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+  private def withPlanConfs[A](body: => A): A =
+    GraftSession.withConfs(spark, Map(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false"))(body)
 
   private lazy val ready: Unit = {
     import spark.implicits._

@@ -23,22 +23,6 @@ class OpsSpec extends SparkSpec {
       .toSeq == Seq(16, 18, 20))
   }
 
-  test("topKPerGroupScalable agrees with the single-window form") {
-    // unique v per (g, v) makes the order total, so the two-level
-    // prune must reproduce the direct window exactly — ranks included
-    val df = (1 to 500).map(i => (i % 5, i * 7 % 501, s"t$i"))
-      .toDF("g", "v", "tag")
-    val direct = Ops.topKPerGroup(df, Seq("g"),
-      Seq(col("v").desc, col("tag").asc), 4)
-      .select("g", "v", "tag", "rank").as[(Int, Int, String, Int)]
-      .collect().toSet
-    val scalable = Ops.topKPerGroupScalable(df, Seq("g"),
-      Seq(col("v").desc, col("tag").asc), 4, buckets = 8)
-      .select("g", "v", "tag", "rank").as[(Int, Int, String, Int)]
-      .collect().toSet
-    assert(scalable == direct)
-  }
-
   test("topKPerGroupAgg agrees with the window form, both directions") {
     val df = (1 to 500).map(i => (i % 5, (i * 7 % 501).toLong, i.toLong))
       .toDF("g", "v", "id")

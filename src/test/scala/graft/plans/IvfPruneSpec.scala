@@ -35,6 +35,19 @@ class IvfPruneSpec extends SparkSpec {
     (dir, index.centroids)
   }
 
+  /** The executed plan's text, after asserting the top-k stayed Spark's
+    * stock bounded-heap TakeOrderedAndProject (no global Sort). */
+  private def stockTopK(df: DataFrame): String = {
+    import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plan = df.queryExecution.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    assert(aqe.collect(plan) { case t: TakeOrderedAndProjectExec => t }
+      .size == 1, plan)
+    assert(aqe.collect(plan) { case s: SortExec => s }.isEmpty, plan)
+    plan.toString
+  }
+
   override def afterAll(): Unit = {
     KnnIvfCatalog.unregister("ivf_cell")
     super.afterAll()
@@ -45,8 +58,7 @@ class IvfPruneSpec extends SparkSpec {
       nprobe = 2)
     val df = l2(indexed).orderBy(col("dist"), col("id")).limit(10)
     val rows = df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("KnnTopKGlobal"), p)
+    val p = stockTopK(df)
     // the injected IN filter must reach the scan as a partition filter
     assert("""PartitionFilters: \[[^\]]*ivf_cell#\d+ (IN|=)""".r.findFirstIn(p).isDefined, p)
 
@@ -68,7 +80,7 @@ class IvfPruneSpec extends SparkSpec {
         typedLit(qvec)), col("id"))
       .limit(5)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
+    val p = stockTopK(df)
     assert("""PartitionFilters: \[[^\]]*ivf_cell#\d+ (IN|=)""".r.findFirstIn(p).isDefined, p)
   }
 
@@ -77,8 +89,7 @@ class IvfPruneSpec extends SparkSpec {
       nprobe = 1)
     val df = l2(indexed).orderBy(col("dist").desc, col("id")).limit(10)
     val rows = df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("KnnTopKGlobal"), p) // top-k rewrite still applies
+    val p = stockTopK(df)
     assert(!"""PartitionFilters: \[[^\]]*ivf_cell#\d+ (IN|=)""".r
       .findFirstIn(p).isDefined,
       "farthest-point query was pruned to NEAREST cells: " + p)
@@ -94,8 +105,7 @@ class IvfPruneSpec extends SparkSpec {
     val plain = spark.read.parquet(path)
     val df = l2(plain).orderBy(col("dist"), col("id")).limit(10)
     val rows = df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("KnnTopKGlobal"), p) // top-k rewrite still fires
+    val p = stockTopK(df)
     assert(!"""PartitionFilters: \[[^\]]*ivf_cell""".r.findFirstIn(p).isDefined, p)
     // exact answer: brute force over the full corpus
     val exact = l2(corpus).orderBy(col("dist"), col("id")).limit(10)

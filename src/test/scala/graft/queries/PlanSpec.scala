@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{GraftSession, SparkEntry, SparkSpec}
 
 /** Physical-plan shape checks — the scale-readiness criteria from
   * SURVEY.md §4 asserted against the actual executed plans: filters and
@@ -12,7 +12,7 @@ class PlanSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String = {
+  private def plan(name: String): String = GraftSession.withConfs(spark) {
     val df = (SparkEntry.queries ++ SparkEntry.benchOnlyQueries)(name)(spark, dir)
     df.collect() // finalize AQE so codegen / join choices are visible
     df.queryExecution.executedPlan.toString
@@ -157,10 +157,16 @@ class PlanSpec extends SparkSpec {
       .findFirstIn(p.toLowerCase).isDefined, p)
   }
 
-  test("v08 executes through the KnnTopK pair, not a global sort") {
-    val p = plan("v08_topk_rewrite")
-    assert(p.contains("KnnTopKGlobal") && p.contains("KnnTopKLocal"), p)
-    assert(!p.contains("TakeOrderedAndProject"), p)
+  test("v08 plans as one two-key TakeOrderedAndProject, not a global sort") {
+    import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("v08_topk_rewrite")(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val topk = aqe.collect(plan) { case t: TakeOrderedAndProjectExec => t }
+    assert(topk.size == 1 && topk.head.sortOrder.size == 2, plan)
+    assert(aqe.collect(plan) { case s: SortExec => s }.isEmpty, plan)
   }
 
   test("t08/t09 chunking + repetition metrics are pure map-side") {
@@ -226,15 +232,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("x09 injects a runtime bloom filter on the fact side; x10 doesn't") {
-    try {
-      // executed plans print the filter as might_contain(...) over a
-      // bloom_filter_agg subquery on the dim side
-      val on = plan("x09_bloom_join")
-      assert(on.contains("might_contain") && on.contains("bloom_filter_agg"),
-        s"bloom filter did not fire:\n$on")
-      val off = plan("x10_bloom_off")
-      assert(!off.contains("might_contain"), off)
-    } finally BenchSuite.PinnedConfKeys.foreach(spark.conf.unset)
+    // executed plans print the filter as might_contain(...) over a
+    // bloom_filter_agg subquery on the dim side
+    val on = plan("x09_bloom_join")
+    assert(on.contains("might_contain") && on.contains("bloom_filter_agg"),
+      s"bloom filter did not fire:\n$on")
+    val off = plan("x10_bloom_off")
+    assert(!off.contains("might_contain"), off)
   }
 
   test("the Z-order key is a pure projection — no Exchange, no UDF (c05)") {
