@@ -1,6 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Data-layout utilities for the 100 TB posture — the concerns that
@@ -80,38 +81,53 @@ object Layout {
 
   /** Hash-cluster `df` on `partCols` for a `partitionBy` write with an
     * EXPLICIT shuffle-partition count — the shared clustering step of
-    * every standing-index write/admit/compact.
+    * every partitioned index write/admit/compact.
     *
     * Why explicit (r18, guide §2.6 idle capacity): a bare
     * `repartition(cols)` is subject to AQE partition coalescing, and
     * on a small exchange AQE collapses it to ONE task — which then
-    * creates every partition directory's file SEQUENTIALLY. Measured:
-    * a 256-directory VideoFrameIndex write of 6,800 band rows spent
-    * ~3.1 s in one task's serial file creation against 0.15 s of
-    * actual compute+shuffle; with the count pinned the files are
-    * created by as many tasks as the deployment's own shuffle knob
-    * allows. Each partition value still hashes to exactly ONE task,
-    * so the one-file-per-directory invariant is unchanged, as is the
-    * hot-partition skew caveat. `spark.sql.shuffle.partitions` is the
-    * deployment's scale setting (cores locally, thousands on a
-    * cluster), not a bench constant — the same code spreads a 100 TB
-    * append across the cluster's width. */
+    * creates every partition directory's file SEQUENTIALLY. The IVF
+    * cell layouts ([[graft.ops.VectorDedupIndex]],
+    * [[graft.vector.VectorSearch]]) write one directory per cell, tens
+    * of directories per write, and would pay that serial file creation;
+    * with the count pinned the files are created by as many tasks as
+    * the deployment's own shuffle knob allows. Each partition value
+    * still hashes to exactly ONE task, so the one-file-per-directory
+    * invariant is unchanged, as is the hot-partition skew caveat.
+    * `spark.sql.shuffle.partitions` is the deployment's scale setting
+    * (cores locally, thousands on a cluster), not a bench constant —
+    * the same code spreads a 100 TB append across the cluster's
+    * width. */
   def clusterForPartitionedWrite(df: DataFrame,
       partCols: Seq[String]): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     df.repartition(n, partCols.map(col): _*)
   }
 
+  /** A `partitionBy(partCols)` writer over `df` hash-clustered on
+    * `partCols` ([[clusterForPartitionedWrite]]: one file per partition
+    * directory per write) and sorted by `partCols ++ sortCols` inside
+    * each task. The partition columns lead the sort so the writer's own
+    * required ordering is already met and it adds no sort of its own
+    * that would discard the `sortCols` order within each file. */
+  def clusteredWriter(df: DataFrame, partCols: Seq[String],
+      sortCols: Seq[String] = Nil): DataFrameWriter[Row] =
+    clusterForPartitionedWrite(df, partCols)
+      .sortWithinPartitions((partCols ++ sortCols).map(col): _*)
+      .write.partitionBy(partCols: _*)
+
   /** [[compact]] for a `partitionBy(partCols)` layout, PRESERVING the
     * layout — the maintenance half of nightly index appends
     * ([[graft.ops.VectorDedupIndex.admitBatch]] /
     * [[graft.ops.TextDedupIndex.admitBatch]] leave one file per
     * partition value per night; a year of appends is 365 footer reads
-    * per directory). Hash-clustering ON the partition columns puts
-    * each partition value in exactly one task, so the rewrite emits
-    * exactly one file per partition directory (`maxRecordsPerFile`
-    * splits only a genuinely oversized one). `sortCols` co-sorts rows
-    * within each file for tight row-group stats.
+    * per directory). `rows` is the index as read (or a projection of
+    * it, to retire a column). Hash-clustering ON the partition columns
+    * puts each partition value in exactly one task, so the rewrite
+    * emits exactly one file per partition directory
+    * (`maxRecordsPerFile` splits only a genuinely oversized one).
+    * `sortCols` co-sorts rows within each file for tight row-group
+    * stats.
     *
     * Writes to `outPath` — never in place (Spark cannot safely
     * overwrite its own input); the caller swaps directories after
@@ -119,18 +135,31 @@ object Layout {
     * rewritten by one task — acceptable for maintenance, and the
     * occupancy skew that causes it is itself the re-fit signal (see
     * VectorDedupIndex's drift contract). */
-  def compactPartitioned(spark: SparkSession, inPath: String,
-      outPath: String, partCols: Seq[String],
-      sortCols: Seq[String] = Nil,
-      maxRecordsPerFile: Long = 1000000L): Unit = {
-    val df = spark.read.parquet(inPath)
-    val clustered = clusterForPartitionedWrite(df, partCols)
-    val sorted =
-      if (sortCols.isEmpty) clustered
-      else clustered.sortWithinPartitions(sortCols.map(col): _*)
-    sorted.write
+  def compactPartitioned(rows: DataFrame, outPath: String,
+      partCols: Seq[String], sortCols: Seq[String] = Nil,
+      maxRecordsPerFile: Long = 1000000L): Unit =
+    clusteredWriter(rows, partCols, sortCols)
       .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partCols: _*)
       .mode(SaveMode.Overwrite).parquet(outPath)
+
+  /** Fails before an append to a band index ([[graft.ops.TextDedupIndex]],
+    * [[graft.multimodal.VideoFrameIndex]]) that still has the old
+    * two-level layout, a directory per (band, band-key group): `band=`
+    * files written beside group directories make every later read fail
+    * partition discovery. The migration is the index's `compactIndex`,
+    * which reads either layout and writes the `band=`-only one. */
+  def requireBandLayout(spark: SparkSession, indexPath: String,
+      compactCall: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(indexPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def subdirs(q: org.apache.hadoop.fs.Path, prefix: String) =
+      fs.listStatus(q).filter(st =>
+        st.isDirectory && st.getPath.getName.startsWith(prefix))
+    val nested = fs.exists(p) && subdirs(p, "band=")
+      .exists(d => subdirs(d.getPath, "bgroup=").nonEmpty)
+    require(!nested, s"index at $indexPath has the old band=*/bgroup=* " +
+      "layout; appending to it would break every later read. Migrate it " +
+      s"with $compactCall(spark, $indexPath, outPath) and swap the " +
+      "directories first.")
   }
 }

@@ -15,15 +15,14 @@ import org.apache.spark.sql.functions._
   * 64-bit hashes ever reach the index, never rasters.
   *
   * Layout contract (mirrors TextDedupIndex): band rows are written
-  * `partitionBy(band, bgroup)` where `bgroup = phash-band-key mod
-  * [[GroupMod]]` — one directory per raw 16-bit key would mean 256k
-  * directories of tiny files; grouping caps it at bands × GroupMod
-  * while a probe still prunes to only the groups its batch hashes
-  * into. The probe collects the batch's (band, bgroup) set
-  * driver-side (bounded by bands × GroupMod, independent of batch AND
-  * corpus size), pushes it as a partition filter (PartitionFilters —
-  * spec-pinned), equi-joins surviving index rows on the exact
-  * (band, bkey), and Hamming-verifies. Recall contract is
+  * `partitionBy(band)`, one directory per band, rows sorted by the
+  * band key `bkey` inside each band's file(s) — one directory per raw
+  * 16-bit key would mean 256k directories of tiny files. The probe
+  * semi-joins the index rows onto the batch's distinct (band, bkey)
+  * (a broadcast LeftSemi join, spec-pinned), so only the buckets the
+  * batch hits — each one whole — reach the collapse and the cap, then
+  * joins on the exact (band, bkey) and Hamming-verifies. Recall
+  * contract is
   * [[Multimodal.videoPairsFromFrameHashes]]'s: guaranteed for
   * Hamming ≤ bands−1, best-effort LSH above.
   *
@@ -39,8 +38,6 @@ import org.apache.spark.sql.functions._
   * index has all of them).
   */
 object VideoFrameIndex {
-
-  val GroupMod = 64
 
   /** Sidecar recording the banding the index was built with. The
     * leading underscore keeps it invisible to parquet directory
@@ -87,7 +84,7 @@ object VideoFrameIndex {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write(
-      s"""{"bands":$bands,"groupMod":$GroupMod}""".getBytes("UTF-8"))
+      s"""{"bands":$bands}""".getBytes("UTF-8"))
     finally out.close()
   }
 
@@ -132,77 +129,73 @@ object VideoFrameIndex {
         "(near-)nothing and read as 'no duplicates'")
   }
 
-  /** Build + persist the corpus index. One corpus scan; the
-    * hash-cluster on (band, bgroup) is the only shuffle and leaves
-    * exactly ONE file per partition directory — without it every
-    * input task writes into every directory (measured: 32 tasks ×
-    * 256 dirs = 8k small files, and a 40-directory probe paid ~1,300
-    * file opens for ~60k rows). Persists `bands` in the [[MetaFile]]
-    * sidecar — see the class doc. */
+  /** Cluster on `band`, sort by `bkey`, `partitionBy(band)`: at most
+    * one new file per band directory per write. */
+  private def bandWriter(rows: DataFrame) =
+    graft.io.Layout.clusteredWriter(rows, Seq("band"), Seq("bkey"))
+
+  /** Build + persist the corpus index. One corpus scan; the band
+    * clustering is the only shuffle and leaves exactly ONE file per
+    * band directory. Persists `bands` in the [[MetaFile]] sidecar — see
+    * the class doc. */
   def writeIndex(frames: DataFrame, path: String, bands: Int = 4): Unit = {
-    bandRows(frames, bands)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-      .transform(graft.io.Layout.clusterForPartitionedWrite(_,
-        Seq("band", "bgroup")))
-      .write.partitionBy("band", "bgroup")
-      .mode("overwrite").parquet(path)
+    bandWriter(bandRows(frames, bands)).mode("overwrite").parquet(path)
     writeMeta(frames.sparkSession, path, bands)
   }
 
   /** Append an accepted batch's band rows — the nightly admit half.
     * Hashing is deterministic and row-local, so admitted rows are
     * indistinguishable from build-time rows (spec pins admit ≡
-    * rebuild). Hash-clustering on (band, bgroup) leaves exactly ONE
-    * new file per touched partition directory per admit; run
-    * [[compactIndex]] on the usual cadence. Fails loudly when the
-    * caller's `bands` differs from the index's. */
+    * rebuild). Leaves at most ONE new file per band directory per
+    * admit; run [[compactIndex]] on the usual cadence. Fails loudly
+    * when the caller's `bands` differs from the index's, and before
+    * writing on an index in the old two-level layout
+    * ([[graft.io.Layout.requireBandLayout]]; [[compactIndex]] migrates
+    * it). */
   def admitBatch(frames: DataFrame, indexPath: String,
       bands: Int = 4): Unit = {
     requireBands(frames.sparkSession, indexPath, bands, "admitBatch")
-    bandRows(frames, bands)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-      .transform(graft.io.Layout.clusterForPartitionedWrite(_,
-        Seq("band", "bgroup")))
-      .write.partitionBy("band", "bgroup")
-      .mode("append").parquet(indexPath)
+    graft.io.Layout.requireBandLayout(frames.sparkSession, indexPath,
+      "VideoFrameIndex.compactIndex")
+    bandWriter(bandRows(frames, bands)).mode("append").parquet(indexPath)
   }
 
-  /** Rewrite the index with one bkey-sorted file per (band, bgroup)
-    * directory — small-file maintenance for nightly appends. Writes
-    * to `outPath` (never in place); swap after validating. The
-    * banding sidecar travels with the rewrite. */
+  /** Rewrite the index with one bkey-sorted file per band directory —
+    * small-file maintenance for nightly appends. Reads either layout
+    * (the old two-level one too) and writes the `partitionBy(band)`
+    * one. Writes to `outPath` (never in place); swap after validating.
+    * The banding sidecar travels with the rewrite. */
   def compactIndex(spark: SparkSession, indexPath: String,
       outPath: String): Unit = {
     val bands = indexBands(spark, indexPath)
-    graft.io.Layout.compactPartitioned(spark, indexPath, outPath,
-      Seq("band", "bgroup"), sortCols = Seq("bkey"))
+    graft.io.Layout.compactPartitioned(
+      spark.read.parquet(indexPath)
+        .select("video", "frame_idx", "phash", "band", "bkey"),
+      outPath, Seq("band"), sortCols = Seq("bkey"))
     writeMeta(spark, outPath, bands)
   }
 
   /** Probe the persisted index with a new batch of frame hashes,
-    * reading ONLY the index partitions the batch hashes into.
+    * reading only the index rows in the buckets the batch hits.
     * Returns (pairs, droppedBuckets): pairs = one row per
     * (corpus_video, new_video) with matched keyframe counts and
     * `new_frac = matched_new / n_frames_new` — the fraction of the
     * NEW video already present in the corpus, which is the quantity
     * an ingest gate thresholds (the admit decision is about the new
     * item; the corpus side's frame totals live with the corpus, not
-    * in a full-index rescan that would defeat the pruning this index
-    * exists for). droppedBuckets is the
+    * in a full-index rescan). droppedBuckets is the
     * [[graft.ops.Blocking.capBucketsWeighted]] report over the CORPUS
-    * side (identical rows to the raw-row capBuckets report —
-    * bucket_size is the expanded frame-row count):
-    * a hot band key (flat/black frames — the exact case the batch
-    * path's cap exists for) is dropped AND reported, never allowed
-    * to explode the nightly probe's fan-out unbounded (ADVICE r17;
-    * the batch side needs no cap — its contribution is bounded by
-    * the nightly batch's own size, so per-bucket fan-out is at most
-    * bucketCap × |batch|).
-    *
-    * The batch is small next to the corpus by the incremental
-    * contract; its (band, bgroup) set is collected driver-side —
-    * bounded by bands × GroupMod regardless of batch size. Fails
-    * loudly when the caller's `bands` differs from the index's. */
+    * side of the buckets the batch hits (identical rows to the
+    * raw-row capBuckets report — bucket_size is the expanded
+    * frame-row count): a hot band key the batch hits (flat/black
+    * frames — the exact case the batch path's cap exists for) is
+    * dropped AND reported, never allowed to explode the nightly
+    * probe's fan-out unbounded (ADVICE r17; the batch side needs no
+    * cap — its contribution is bounded by the nightly batch's own
+    * size, so per-bucket fan-out is at most bucketCap × |batch|). A
+    * hot bucket the batch does not hit is neither read nor reported.
+    * An empty batch yields two empty frames. Fails loudly when the
+    * caller's `bands` differs from the index's. */
   def probePairs(spark: SparkSession, indexPath: String,
       newFrames: DataFrame, hammingMax: Int = 10,
       bands: Int = 4, bucketCap: Int = 10000): (DataFrame, DataFrame) = {
@@ -215,82 +208,61 @@ object VideoFrameIndex {
     // per-hash frame sets within a video are disjoint, so
     // countDistinct(frame) = Σ multiplicity over distinct matched
     // hashes). The batch side collapses before banding; the corpus
-    // side collapses the pruned index rows map-side (duplicates of a
-    // hash co-locate in their (band, bgroup) partition files, so the
-    // partial aggregate collapses before the exchange).
+    // side collapses the semi-joined index rows map-side.
     // r19 (guide §5 reuse): the collapsed batch is consumed THREE
-    // times — the driver-side (band, bgroup) pruning collect, the
-    // broadcast side of the candidate join, and the per-video frame
-    // totals — and each consumer re-evaluated the caller's whole
-    // batch subtree (for the bench fixture: a full re-synthesis per
-    // consumer; in production a re-read of the landed batch).
-    // localCheckpoint (eager) evaluates it once; the batch is
-    // nightly-small by the incremental contract, so the checkpointed
-    // rows are bounded. n_frames_new = Σ nnf over a video's distinct
-    // hashes (= its frame count under the one-row-per-(video,
-    // frame_idx) input contract), so the raw batch is never re-read.
+    // times — the semi-join keys, the broadcast side of the candidate
+    // join, and the per-video frame totals — and each consumer would
+    // re-evaluate the caller's whole batch subtree (for the bench
+    // fixture: a full re-synthesis per consumer; in production a
+    // re-read of the landed batch). localCheckpoint (eager) evaluates
+    // it once; the batch is nightly-small by the incremental
+    // contract, so the checkpointed rows are bounded. n_frames_new =
+    // Σ nnf over a video's distinct hashes (= its frame count under
+    // the one-row-per-(video, frame_idx) input contract), so the raw
+    // batch is never re-read.
     val newU = newFrames.groupBy("video", "phash")
       .agg(count(lit(1)).as("nnf"))
       .localCheckpoint()
     val nb = bandRowsKeeping(newU, bands)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-    val groups = nb.select("band", "bgroup").distinct()
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    if (groups.isEmpty) {
-      // an empty batch probes nothing — empty frames, not a crash
-      val pairs = spark.emptyDataFrame.select(
-        lit("").as("corpus_video"), lit("").as("new_video"),
-        lit(0L).as("matched_corpus"), lit(0L).as("matched_new"),
-        lit(0L).as("n_frames_new"), lit(0d).as("new_frac")).limit(0)
-      val dropped = spark.emptyDataFrame.select(
-        lit(0).as("band"), lit(0L).as("bkey"),
-        lit(0L).as("bucket_size")).limit(0)
-      (pairs, dropped)
-    } else {
-      // OR-of-conjunctions over the partition columns — prunes at
-      // plan time (PartitionFilters), asserted in VideoFrameIndexSpec
-      val prune = groups.map { case (b, g) =>
-        col("band") === b && col("bgroup") === g
-      }.reduce(_ || _)
-      // collapse pruned corpus rows to distinct (bucket, video, hash)
-      // with frame counts — the weighted cap keeps the same buckets
-      // and the same (band, bkey, bucket_size) dropped report as the
-      // raw-row capBuckets did (whole buckets, summed multiplicities)
-      val pruned = spark.read.parquet(indexPath)
-        .filter(prune)
-        .select(col("video").as("corpus_video"),
-          col("phash").as("corpus_ph"),
-          col("band").cast("int").as("band"), col("bkey"))
-        .groupBy("band", "bkey", "corpus_video", "corpus_ph")
-        .agg(count(lit(1)).as("cnf"))
-      val (corpus, dropped) = graft.ops.Blocking.capBucketsWeighted(
-        pruned, Seq("band", "bkey"), bucketCap, "cnf")
-      val cand = corpus
-        .join(broadcast(nb.select(col("video").as("new_video"),
-          col("phash").as("new_ph"), col("nnf"),
-          col("band"), col("bkey"))), Seq("band", "bkey"))
-        .filter(col("corpus_video") =!= col("new_video"))
-        .filter(bit_count(col("corpus_ph").bitwiseXOR(col("new_ph")))
-          <= hammingMax)
-      val nNew = newU.groupBy(col("video").as("new_video"))
-        .agg(sum(col("nnf")).as("n_frames_new"))
-      // collect_set dedups multi-band hash matches; the in-row fold
-      // sums multiplicities (sets bounded by distinct hashes/video)
-      val pairs = cand.groupBy("corpus_video", "new_video")
-        .agg(collect_set(struct(col("corpus_ph"), col("cnf"))).as("sc"),
-          collect_set(struct(col("new_ph"), col("nnf"))).as("sn"))
-        .select(col("corpus_video"), col("new_video"),
-          aggregate(col("sc"), lit(0L), (acc, x) => acc + x("cnf"))
-            .as("matched_corpus"),
-          aggregate(col("sn"), lit(0L), (acc, x) => acc + x("nnf"))
-            .as("matched_new"))
-        .join(broadcast(nNew), Seq("new_video"))
-        .select(col("corpus_video"), col("new_video"),
-          col("matched_corpus"), col("matched_new"), col("n_frames_new"),
-          (col("matched_new").cast("double") / col("n_frames_new"))
-            .as("new_frac"))
-      (pairs, dropped)
-    }
+    // the semi-join key IS the bucket key, so every surviving bucket
+    // is whole: the weighted cap keeps the same buckets and the same
+    // (band, bkey, bucket_size) report as a cap over the full index
+    // would for these buckets (the m03 oracle row pins this)
+    val hit = spark.read.parquet(indexPath)
+      .select(col("video").as("corpus_video"),
+        col("phash").as("corpus_ph"),
+        col("band").cast("int").as("band"), col("bkey"))
+      .join(broadcast(nb.select("band", "bkey").distinct()),
+        Seq("band", "bkey"), "left_semi")
+      .groupBy("band", "bkey", "corpus_video", "corpus_ph")
+      .agg(count(lit(1)).as("cnf"))
+    val (corpus, dropped) = graft.ops.Blocking.capBucketsWeighted(
+      hit, Seq("band", "bkey"), bucketCap, "cnf")
+    val cand = corpus
+      .join(broadcast(nb.select(col("video").as("new_video"),
+        col("phash").as("new_ph"), col("nnf"),
+        col("band"), col("bkey"))), Seq("band", "bkey"))
+      .filter(col("corpus_video") =!= col("new_video"))
+      .filter(bit_count(col("corpus_ph").bitwiseXOR(col("new_ph")))
+        <= hammingMax)
+    val nNew = newU.groupBy(col("video").as("new_video"))
+      .agg(sum(col("nnf")).as("n_frames_new"))
+    // collect_set dedups multi-band hash matches; the in-row fold
+    // sums multiplicities (sets bounded by distinct hashes/video)
+    val pairs = cand.groupBy("corpus_video", "new_video")
+      .agg(collect_set(struct(col("corpus_ph"), col("cnf"))).as("sc"),
+        collect_set(struct(col("new_ph"), col("nnf"))).as("sn"))
+      .select(col("corpus_video"), col("new_video"),
+        aggregate(col("sc"), lit(0L), (acc, x) => acc + x("cnf"))
+          .as("matched_corpus"),
+        aggregate(col("sn"), lit(0L), (acc, x) => acc + x("nnf"))
+          .as("matched_new"))
+      .join(broadcast(nNew), Seq("new_video"))
+      .select(col("corpus_video"), col("new_video"),
+        col("matched_corpus"), col("matched_new"), col("n_frames_new"),
+        (col("matched_new").cast("double") / col("n_frames_new"))
+          .as("new_frac"))
+    (pairs, dropped)
   }
 
   /** One NIGHTLY video-ingest tick, composed end-to-end (VERDICT r17
@@ -301,7 +273,7 @@ object VideoFrameIndex {
     * over its corpus partners ≥ `dupFrac` ⇒ rejected as a near-dup),
     * admit the surviving videos' frames into the index, and return
     * the decisions. Run [[compactIndex]] on the usual cadence — the
-    * admit leaves one new file per touched partition per night.
+    * admit leaves one new file per band directory per night.
     *
     * Intra-batch duplicates are the BATCH path's job
     * ([[Multimodal.videoPairsFromFrameHashes]] over the night's
@@ -321,7 +293,7 @@ object VideoFrameIndex {
     * Returns (decisions, droppedBuckets): decisions = (video,
     * dup_frac — max new_frac vs the corpus, 0.0 when no corpus
     * partner — admitted: boolean); droppedBuckets = [[probePairs]]'
-    * hot-bucket report. */
+    * report of the hot buckets tonight's batch hits. */
   def nightlyIngest(spark: SparkSession, indexPath: String,
       newFrames: DataFrame, dupFrac: Double = 0.5, hammingMax: Int = 10,
       bands: Int = 4, bucketCap: Int = 10000): (DataFrame, DataFrame) = {

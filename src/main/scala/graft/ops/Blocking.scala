@@ -65,7 +65,7 @@ object Blocking {
     // anti-join form evaluated `blocks` TWICE — once as the hot-bucket
     // aggregate's input and once as the anti-join probe side — and for
     // [[graft.multimodal.VideoFrameIndex.probePairs]] that meant the
-    // pruned index partitions were SCANNED twice per probe (executed
+    // index was SCANNED twice per probe (executed
     // plan r18: two `Scan parquet` nodes over the index, no reuse). A
     // window sum on the bucket key annotates each collapsed row with
     // its bucket's total weight in ONE pass; the window's

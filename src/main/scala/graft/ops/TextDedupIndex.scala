@@ -9,21 +9,18 @@ import graft.functions.TextOps.{md5Long60, md5Long60Jvm, shingles, tokens}
   * production nightly-ingest flow: dedup a small new batch against a
   * 100 TB corpus without rescanning the corpus.
   *
-  * Layout contract (mirrors VectorSearch.writeLshIndexed / the IVF
-  * cell layout): band rows are written `partitionBy(band, bgroup)`
-  * where `bgroup = bkey mod GroupMod` — the full 60-bit band key would
-  * make one directory per bucket (millions of tiny files); grouping
-  * keeps the partition count at nBands × GroupMod while still letting
-  * a probe prune to only the groups its batch hashes into. The probe
-  * collects the batch's (band, bgroup) set driver-side (bounded by
-  * nBands × GroupMod, independent of corpus size), pushes it as a
-  * partition filter, and equi-joins the surviving index rows on the
-  * exact (band, bkey). Candidates then verify downstream (Jaccard on
-  * shingle sets — same as the batch path d04).
+  * Layout contract: band rows are written `partitionBy(band)`, one
+  * directory per band, rows sorted by the 60-bit band key `bkey`
+  * inside each band's file(s) — the sorted keys are what a per-file
+  * key-range summary would prune on. A directory per bkey (one per
+  * bucket: millions of tiny files) or per bkey group would multiply
+  * the listing and small-file costs of every read and write while
+  * skipping almost no files for a batch of any size. The probe
+  * equi-joins the index rows to the batch's band rows on the exact
+  * (band, bkey). Candidates then verify downstream (Jaccard on shingle
+  * sets — same as the batch path d04).
   */
 object TextDedupIndex {
-
-  val GroupMod = 64
 
   /** LSH band rows (doc_id, band, bkey) for a document set: distinct
     * 3-shingles → K salted minima in ONE groupBy (the d02 recipe,
@@ -52,13 +49,16 @@ object TextDedupIndex {
         col("x.bkey").as("bkey"))
   }
 
-  /** Build + persist the corpus index. One corpus scan; the write is
-    * the only shuffle (partitionBy directories). */
+  /** Cluster on `band`, sort by `bkey`, `partitionBy(band)`: at most
+    * one new file per band directory per write. */
+  private def bandWriter(rows: DataFrame) =
+    graft.io.Layout.clusteredWriter(rows, Seq("band"), Seq("bkey"))
+
+  /** Build + persist the corpus index. One corpus scan; the band
+    * clustering is the only shuffle. */
   def writeIndex(docs: DataFrame, path: String, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 8, rowsPerBand: Int = 2): Unit =
-    bandRows(docs, idCol, textCol, k, rowsPerBand)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-      .write.partitionBy("band", "bgroup")
+    bandWriter(bandRows(docs, idCol, textCol, k, rowsPerBand))
       .mode("overwrite").parquet(path)
 
   /** Append an accepted batch's band rows into the persisted index —
@@ -67,67 +67,46 @@ object TextDedupIndex {
     * so tomorrow's batch dedups against tonight's. Hashing is
     * deterministic and row-local, so admitted rows are
     * indistinguishable from build-time rows (spec pins N admit cycles
-    * ≡ one full rebuild). Hash-clustering on (band, bgroup) leaves
-    * exactly ONE new file per touched partition directory per admit;
-    * run [[compactIndex]] on the cadence that keeps files-per-
-    * directory bounded. */
+    * ≡ one full rebuild). Leaves at most ONE new file per band
+    * directory per admit; run [[compactIndex]] on the cadence that
+    * keeps files-per-directory bounded. Fails before writing on an
+    * index in the old two-level layout
+    * ([[graft.io.Layout.requireBandLayout]]; [[compactIndex]] migrates
+    * it). */
   def admitBatch(docs: DataFrame, indexPath: String,
       idCol: String = "doc_id", textCol: String = "text",
-      k: Int = 8, rowsPerBand: Int = 2): Unit =
-    bandRows(docs, idCol, textCol, k, rowsPerBand)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-      .transform(graft.io.Layout.clusterForPartitionedWrite(_,
-        Seq("band", "bgroup")))
-      .write.partitionBy("band", "bgroup")
+      k: Int = 8, rowsPerBand: Int = 2): Unit = {
+    graft.io.Layout.requireBandLayout(docs.sparkSession, indexPath,
+      "TextDedupIndex.compactIndex")
+    bandWriter(bandRows(docs, idCol, textCol, k, rowsPerBand))
       .mode("append").parquet(indexPath)
+  }
 
-  /** Rewrite the index with one bkey-sorted file per (band, bgroup)
-    * directory — the small-file maintenance pass for nightly
-    * [[admitBatch]] appends. Writes to `outPath` (never in place);
-    * swap after validating. */
+  /** Rewrite the index with one bkey-sorted file per band directory —
+    * the small-file maintenance pass for nightly [[admitBatch]]
+    * appends. Reads either layout (the old two-level one too) and
+    * writes the `partitionBy(band)` one. Writes to `outPath` (never in
+    * place); swap after validating. */
   def compactIndex(spark: SparkSession, indexPath: String,
       outPath: String): Unit =
-    graft.io.Layout.compactPartitioned(spark, indexPath, outPath,
-      Seq("band", "bgroup"), sortCols = Seq("bkey"))
+    graft.io.Layout.compactPartitioned(
+      spark.read.parquet(indexPath).select("doc_id", "band", "bkey"),
+      outPath, Seq("band"), sortCols = Seq("bkey"))
 
   /** Candidate (corpus_id, new_id) pairs for a new batch against the
-    * persisted index, reading ONLY the index partitions the batch
-    * hashes into. The batch is assumed small next to the corpus (the
-    * incremental contract); its band set is collected driver-side —
-    * bounded by nBands × GroupMod regardless of batch size. */
+    * persisted index: the index rows equi-joined to the batch's band
+    * rows on the exact (band, bkey). An empty batch (or one whose docs
+    * are all shorter than a shingle) yields no pairs. */
   def probeCandidates(spark: SparkSession, indexPath: String,
       newDocs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 8, rowsPerBand: Int = 2)
-      : DataFrame = {
-    // NOT cached: the batch is micro-batch-sized by the incremental
-    // contract, so re-shingling it once for the `groups` collect and
-    // once inside the returned (lazy) join costs next to nothing —
-    // while a per-batch `.cache()` in the long-lived nightly session
-    // this is built for accumulates blocks that nothing unpersists.
-    val nb = bandRows(newDocs, idCol, textCol, k, rowsPerBand)
-      .withColumn("bgroup", pmod(col("bkey"), lit(GroupMod)))
-    val groups = nb.select("band", "bgroup").distinct()
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
-    // an empty micro-batch (or one whose docs are all shorter than a
-    // shingle) has nothing to probe — return an empty pair frame
-    // instead of crashing the caller's streaming loop
-    if (groups.isEmpty)
-      newDocs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("corpus_id"), lit(0L).as("new_id"))
-    else {
-      // OR-of-conjunctions over the partition columns — prunes at plan
-      // time (PartitionFilters), asserted in TextDedupIndexSpec
-      val prune = groups.map { case (b, g) =>
-        col("band") === b && col("bgroup") === g
-      }.reduce(_ || _)
-      spark.read.parquet(indexPath)
-        .filter(prune)
-        .select(col("doc_id").as("corpus_id"), col("band"), col("bkey"))
-        .join(nb.select(col("doc_id").as("new_id"), col("band"),
-          col("bkey")), Seq("band", "bkey"))
-        .filter(col("corpus_id") =!= col("new_id"))
-        .select("corpus_id", "new_id")
-        .distinct()
-    }
-  }
+      : DataFrame =
+    spark.read.parquet(indexPath)
+      .select(col("doc_id").as("corpus_id"), col("band"), col("bkey"))
+      .join(bandRows(newDocs, idCol, textCol, k, rowsPerBand)
+        .select(col("doc_id").as("new_id"), col("band"), col("bkey")),
+        Seq("band", "bkey"))
+      .filter(col("corpus_id") =!= col("new_id"))
+      .select("corpus_id", "new_id")
+      .distinct()
 }

@@ -117,8 +117,8 @@ object VectorDedupIndex {
     * place); swap directories after validating. */
   def compactIndex(spark: SparkSession, indexPath: String,
       outPath: String, cellCol: String = "ivf_cell"): Unit =
-    graft.io.Layout.compactPartitioned(spark, indexPath, outPath,
-      Seq(cellCol), sortCols = Seq("id"))
+    graft.io.Layout.compactPartitioned(spark.read.parquet(indexPath),
+      outPath, Seq(cellCol), sortCols = Seq("id"))
 
   /** (cell, n_rows, n_files) — the maintenance dashboard: n_files
     * growth says compact, max/mean n_rows skew says the frozen
@@ -229,10 +229,10 @@ object VectorDedupIndex {
   /** (corpus_id, new_id, cell, cos) pairs with cosine ≥ tau between a
     * new batch and the persisted index, reading ONLY the cell
     * partitions the batch assigns into. The batch is small by the
-    * incremental contract (it is broadcast); like
-    * [[TextDedupIndex.probeCandidates]] it is deliberately NOT cached —
-    * re-assigning a micro-batch twice costs next to nothing, while a
-    * per-batch cache in a long-lived nightly session leaks blocks.
+    * incremental contract (it is broadcast); it is deliberately NOT
+    * cached — re-assigning a micro-batch twice costs next to nothing,
+    * while a per-batch cache in a long-lived nightly session leaks
+    * blocks.
     *
     * `nprobe` is the recall knob (VERDICT r13 item 4): each batch row
     * probes its n nearest cells instead of one, so a near-dup pair

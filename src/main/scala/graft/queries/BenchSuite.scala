@@ -905,8 +905,8 @@ object BenchSuite extends QuerySuite {
     * 20×-inflated frame corpus (memoized — in production the index is
     * a standing lake artifact); the timed query probes tonight's new
     * upload — ONE short clip (10 frames, a 2-bit-perturbed v00
-    * near-dup the Hamming verify must accept) — reading only the
-    * index partitions those 10 frames hash into. The A/B arm is
+    * near-dup the Hamming verify must accept) — semi-joining the
+    * index onto the buckets those 10 frames hash into. The A/B arm is
     * [[x34]]: the same night handled by re-pairing the whole corpus.
     * Read x33 ≪ x34 — the standing-index claim as a measured number
     * at both SFs. */
@@ -949,7 +949,7 @@ object BenchSuite extends QuerySuite {
     * the full frame-hash table ∪ clip, the way a shop without a
     * standing index does it. Every night pays corpus-sized banding +
     * candidate + verify work to learn about 10 new frames; x33 pays
-    * clip-sized work against pruned index partitions. */
+    * clip-sized work against the index buckets the clip hits. */
   private val x34 = GraftQuery("x34_video_repair",
     (s, dir) => {
       val (_, clip, frames) = vfiSetup(s, dir)

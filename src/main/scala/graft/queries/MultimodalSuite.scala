@@ -167,18 +167,18 @@ object MultimodalSuite extends QuerySuite {
     * persisted [[graft.multimodal.VideoFrameIndex]] from the first
     * nightly slice of the m01 fixture (videos with vnum % 3 = 0),
     * ADMIT the other two slices on later "nights" (append-only band
-    * rows), COMPACT to one sorted file per (band, bgroup) directory,
+    * rows), COMPACT to one bkey-sorted file per band directory,
     * then PROBE with a batch (videos with vnum % 7 = 0 — these ARE in
     * the corpus, so the probe's corpus≠new filter and the partner
     * pairs v00↔v01, v07↔v06, … are both exercised). The DuckDB twin
     * recomputes the pair set from the banding DIRECTLY on the full
     * frame table — so the green row certifies that N admits +
-    * compaction + a partition-pruned capped probe ≡ the batch banding
+    * compaction + a semi-joined capped probe ≡ the batch banding
     * recipe over everything ever admitted, pair-for-pair. (The cap is
-    * equivalent across engines because a (band, bkey) bucket lies
-    * entirely inside its bgroup = bkey mod 64 partition: partition
-    * pruning keeps buckets whole, so every bucket that can join the
-    * batch has its full-corpus count on both sides.) */
+    * equivalent across engines because the probe semi-joins the index
+    * on the bucket key (band, bkey) itself: every bucket that can join
+    * the batch survives whole, with its full-corpus count on both
+    * sides.) */
   private val m03 = GraftQuery(
     "m03_video_admit_probe",
     (s, dir) => {

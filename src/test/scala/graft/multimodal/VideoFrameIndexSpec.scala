@@ -3,16 +3,17 @@ package graft.multimodal
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{BandIndexFiles, SparkSpec}
 
 /** [[VideoFrameIndex]] — the standing frame-hash index: probe finds
   * exactly the band-blocked Hamming matches a brute-force reference
-  * computes, reads only the batch's partitions (PartitionFilters),
+  * computes, semi-joins the index onto the batch's (band, bkey) keys,
   * N admits ≡ one rebuild, the banding travels WITH the index
   * (ADVICE r17: a bands-mismatched probe fails loudly instead of
   * silently joining 16-bit keys against 8-bit keys), hot corpus
-  * buckets are capped AND reported, and the composed nightly
-  * lifecycle (probe → gate → admit) is equivalent to one gated
+  * buckets the batch hits are capped AND reported, an old-layout index
+  * is refused for appends and migrated by compaction, and the composed
+  * nightly lifecycle (probe → gate → admit) is equivalent to one gated
   * rebuild. */
 class VideoFrameIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -62,7 +63,7 @@ class VideoFrameIndexSpec extends SparkSpec {
       .as[(String, String, Long, Long)].collect().toSet
   }
 
-  test("probe = brute-force reference; pruned scan; fractions correct") {
+  test("probe = brute-force reference; semi-join; fractions correct") {
     val path = java.nio.file.Files
       .createTempDirectory("vframe_idx").toString
     VideoFrameIndex.writeIndex(corpus, path)
@@ -80,12 +81,25 @@ class VideoFrameIndexSpec extends SparkSpec {
     assert(frac(("c0", "n0")) === 1.0)
     assert(frac(("c2", "n1")) === 0.5)
     assert(!frac.keySet.exists(_._2 == "n2"))
-    // and the index scan must be partition-pruned, not a full read
-    val plan = got.queryExecution.executedPlan.toString
-    val scan = plan.split("\n").find(_.contains("PartitionFilters"))
-    assert(scan.isDefined, plan)
-    assert(!scan.get.contains("PartitionFilters: []"),
-      s"index scan reads all partitions:\n$plan")
+    // the index rows reach the collapse only through a broadcast
+    // LeftSemi join on (band, bkey) directly over the index scan
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val plan = got.queryExecution.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val semis = aqe.collect(plan) {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+    }
+    assert(semis.size == 1, plan)
+    assert(semis.head.leftKeys.flatMap(_.references.map(_.name)) ==
+      Seq("band", "bkey"), plan)
+    val scans = aqe.collect(semis.head.left) {
+      case f: FileSourceScanExec => f.relation.location.rootPaths
+    }.flatten.map(p => new java.io.File(p.toUri).getCanonicalPath)
+    assert(scans == Seq(new java.io.File(path).getCanonicalPath),
+      s"$scans\n$plan")
   }
 
   test("admitBatch ≡ rebuild: tomorrow's probe sees tonight's admits") {
@@ -202,6 +216,79 @@ class VideoFrameIndexSpec extends SparkSpec {
     assert(uncapped.filter(col("new_video") === "nf").count() === 30)
   }
 
+  test("dropped report lists only the hot buckets the batch hits") {
+    // a flat family whose key in every band differs from n0's frame-0
+    // key only in bit 6: each hot bucket shares n0's key mod 64 (the
+    // old layout's directory) but the batch never hits it
+    val near = hash(0, 0) ^ 3L // n0's frame 0
+    val flatHash = near ^ 0x0040004000400040L
+    val flat = (for (v <- 0 until 30; f <- 0 until 4)
+      yield (s"f$v", f.toLong, flatHash))
+      .toDF("video", "frame_idx", "phash")
+    val path = java.nio.file.Files
+      .createTempDirectory("vframe_hot_miss").toString
+    VideoFrameIndex.writeIndex(corpus.unionByName(flat), path)
+    val n0 = batch.filter(col("video") === "n0")
+    def keys(frames: DataFrame) = VideoFrameIndex.bandRows(frames)
+      .select(col("band"), col("bkey")).as[(Int, Long)].collect().toSet
+    val batchKeys = keys(n0)
+    val hotKeys = keys(flat)
+    // precondition: 4 hot buckets, none hit by the batch, each a batch
+    // key with bit 6 flipped (so equal to it mod 64)
+    assert(hotKeys.size === 4 && hotKeys.intersect(batchKeys).isEmpty)
+    assert(hotKeys.forall { case (b, k) => batchKeys((b, k ^ 64L)) })
+    val (pairs, dropped) = VideoFrameIndex.probePairs(
+      spark, path, n0, hammingMax = 6, bucketCap = 50)
+    assert(dropped.count() === 0, dropped.collect().mkString(","))
+    val pairSet = pairs.select("corpus_video", "new_video")
+      .as[(String, String)].collect().toSet
+    assert(pairSet === Set(("c0", "n0")), pairSet)
+  }
+
+  test("old-layout index: admit refuses it untouched, compaction migrates it") {
+    val old = java.nio.file.Files
+      .createTempDirectory("vframe_old").toString
+    BandIndexFiles.writeOldLayout(VideoFrameIndex.bandRows(corpus), old)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(old, VideoFrameIndex.MetaFile),
+      """{"bands":4,"groupMod":64}""".getBytes("UTF-8"))
+    val fresh = java.nio.file.Files
+      .createTempDirectory("vframe_old_fresh").toString
+    VideoFrameIndex.writeIndex(corpus, fresh)
+    def probe(p: String) =
+      VideoFrameIndex.probePairs(spark, p, batch, hammingMax = 6)._1
+        .select("corpus_video", "new_video", "matched_corpus",
+          "matched_new", "n_frames_new", "new_frac")
+        .as[(String, String, Long, Long, Long, Double)].collect().toSet
+    val want = probe(fresh)
+    assert(want.nonEmpty)
+    // the probe reads the old layout as it is
+    assert(probe(old) == want)
+    val before = BandIndexFiles.snapshot(old)
+    val e = intercept[IllegalArgumentException] {
+      VideoFrameIndex.admitBatch(batch, old)
+    }
+    assert(e.getMessage.contains("VideoFrameIndex.compactIndex"), e.getMessage)
+    assert(BandIndexFiles.snapshot(old) == before)
+    val migrated = java.nio.file.Files
+      .createTempDirectory("vframe_old_migrated").toString
+    VideoFrameIndex.compactIndex(spark, old, migrated)
+    assert(VideoFrameIndex.indexBands(spark, migrated) === 4)
+    val files = BandIndexFiles.parquetByBand(migrated)
+    assert(files.keySet == (0 until 4).map(b => s"band=$b").toSet)
+    assert(BandIndexFiles.nestedDirs(migrated).isEmpty)
+    files.values.foreach { fs =>
+      assert(fs.size == 1, fs)
+      val keys = BandIndexFiles.bkeys(spark, fs.head)
+      assert(keys.size > 1 && keys == keys.sorted, fs.head)
+    }
+    assert(!spark.read.parquet(migrated).columns.contains("bgroup"))
+    assert(probe(migrated) == want)
+    // and the migrated index takes appends again
+    VideoFrameIndex.admitBatch(batch, migrated)
+    assert(spark.read.parquet(migrated).count() === 4L * (32 + 24))
+  }
+
   test("nightly lifecycle: probe → gate → admit ≡ one gated rebuild") {
     val path = java.nio.file.Files
       .createTempDirectory("vframe_life").toString
@@ -236,8 +323,8 @@ class VideoFrameIndexSpec extends SparkSpec {
     VideoFrameIndex.writeIndex(corpus.unionByName(admitted), rebuilt)
     def rows(p: String) = spark.read.parquet(p)
       .select(col("video"), col("frame_idx"), col("phash"),
-        col("band").cast("int"), col("bgroup").cast("int"), col("bkey"))
-      .as[(String, Long, Long, Int, Int, Long)].collect().toSet
+        col("band").cast("int"), col("bkey"))
+      .as[(String, Long, Long, Int, Long)].collect().toSet
     assert(rows(path) === rows(rebuilt))
   }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{BandIndexFiles, SparkSpec}
 
 class TextDedupIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -24,13 +24,12 @@ class TextDedupIndexSpec extends SparkSpec {
     (103L, sentence(11)) // exact copy of doc 11
   ).toDF("doc_id", "text")
 
-  test("probe prunes index partitions and finds the cross candidates") {
+  test("probe = band-key reference and finds the cross candidates") {
     val path = java.nio.file.Files
       .createTempDirectory("lsh_index").toString
     TextDedupIndex.writeIndex(corpus, path)
-    val got = TextDedupIndex.probeCandidates(spark, path, batch)
-    got.collect() // finalize AQE before reading the executed plan
-    val pairs = got.as[(Long, Long)].collect().toSet
+    val pairs = TextDedupIndex.probeCandidates(spark, path, batch)
+      .as[(Long, Long)].collect().toSet
     // brute-force reference: band-key equality between corpus and batch
     val cb = TextDedupIndex.bandRows(corpus, "doc_id", "text")
       .select(col("doc_id").as("corpus_id"), col("band"), col("bkey"))
@@ -45,18 +44,11 @@ class TextDedupIndexSpec extends SparkSpec {
     assert(pairs.contains((7L, 101L)),
       "near-copy missed — 4 bands of 2 should catch a 1-token edit")
     assert(!pairs.exists(_._2 == 102L))
-    // and the scan must be partition-pruned, not a full index read
-    val plan = got.queryExecution.executedPlan.toString
-    val scan = plan.split("\n").find(_.contains("PartitionFilters"))
-    assert(scan.isDefined, plan)
-    assert(!scan.get.contains("PartitionFilters: []"),
-      s"index scan reads all partitions:\n$plan")
   }
 
   test("streaming ingest probes the index per micro-batch (foreachBatch)") {
     // the nightly-ingest flow as a STREAM: each arriving micro-batch of
-    // documents dedups against the persisted corpus index; only the
-    // matching index partitions are read per batch
+    // documents dedups against the persisted corpus index
     val idx = java.nio.file.Files
       .createTempDirectory("lsh_stream_idx").toString
     TextDedupIndex.writeIndex(corpus, idx)
@@ -116,9 +108,8 @@ class TextDedupIndexSpec extends SparkSpec {
       corpus.unionByName(s1).unionByName(s2), full)
 
     def content(p: String) = spark.read.parquet(p)
-      .select(col("doc_id"), col("band").cast("long"), col("bkey"),
-        col("bgroup").cast("long"))
-      .as[(Long, Long, Long, Long)].collect().toSet
+      .select(col("doc_id"), col("band").cast("long"), col("bkey"))
+      .as[(Long, Long, Long)].collect().toSet
     assert(content(incr) == content(full))
 
     def pairs(p: String) = TextDedupIndex
@@ -129,10 +120,8 @@ class TextDedupIndexSpec extends SparkSpec {
 
     // ≤ 1 file per directory per write that touched it; compaction
     // brings it back to exactly 1 with content intact
-    def maxFiles(p: String) = new java.io.File(p).listFiles()
-      .filter(_.getName.startsWith("band=")).flatMap(_.listFiles())
-      .filter(_.getName.startsWith("bgroup=")).map(
-        _.listFiles().count(_.getName.endsWith(".parquet"))).max
+    def maxFiles(p: String) =
+      BandIndexFiles.parquetByBand(p).values.map(_.size).max
     assert(maxFiles(incr) <= 3, s"files per dir: ${maxFiles(incr)}")
     val compacted = java.nio.file.Files
       .createTempDirectory("lsh_admit_comp").toString
@@ -141,16 +130,63 @@ class TextDedupIndexSpec extends SparkSpec {
     assert(content(compacted) == content(full))
   }
 
-  test("index layout bounds partition count by bands x GroupMod") {
+  test("layout: one directory per band, none per bgroup, bkey-sorted files") {
     val path = java.nio.file.Files
       .createTempDirectory("lsh_layout").toString
     TextDedupIndex.writeIndex(corpus, path)
-    val bandDirs = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("band="))
-    assert(bandDirs.length == 4) // k=8, rowsPerBand=2
-    bandDirs.foreach { d =>
-      val groups = d.listFiles().count(_.getName.startsWith("bgroup="))
-      assert(groups <= TextDedupIndex.GroupMod, d.toString)
+    TextDedupIndex.admitBatch(batch, path)
+    val byBand = BandIndexFiles.parquetByBand(path)
+    assert(byBand.keySet == (0 until 4).map(b => s"band=$b").toSet) // k=8, rowsPerBand=2
+    assert(BandIndexFiles.nestedDirs(path).isEmpty)
+    // the build and the admit each leave one bkey-sorted file per band
+    assert(byBand.values.forall(_.size == 2), byBand)
+    byBand.values.flatten.foreach { f =>
+      val keys = BandIndexFiles.bkeys(spark, f)
+      assert(keys == keys.sorted, f)
     }
+    val compacted = java.nio.file.Files
+      .createTempDirectory("lsh_layout_comp").toString
+    TextDedupIndex.compactIndex(spark, path, compacted)
+    val files = BandIndexFiles.parquetByBand(compacted)
+    assert(files.keySet == byBand.keySet)
+    assert(BandIndexFiles.nestedDirs(compacted).isEmpty)
+    files.values.foreach { fs =>
+      assert(fs.size == 1, fs)
+      val keys = BandIndexFiles.bkeys(spark, fs.head)
+      assert(keys.size > 1 && keys == keys.sorted, fs.head)
+    }
+  }
+
+  test("old-layout index: admit refuses it untouched, compaction migrates it") {
+    val old = java.nio.file.Files
+      .createTempDirectory("lsh_old").toString
+    BandIndexFiles.writeOldLayout(
+      TextDedupIndex.bandRows(corpus, "doc_id", "text"), old)
+    val fresh = java.nio.file.Files
+      .createTempDirectory("lsh_old_fresh").toString
+    TextDedupIndex.writeIndex(corpus, fresh)
+    def pairs(p: String) = TextDedupIndex.probeCandidates(spark, p, batch)
+      .as[(Long, Long)].collect().toSet
+    val want = pairs(fresh)
+    assert(want.nonEmpty)
+    // the probe reads the old layout as it is
+    assert(pairs(old) == want)
+    val before = BandIndexFiles.snapshot(old)
+    val e = intercept[IllegalArgumentException] {
+      TextDedupIndex.admitBatch(batch, old)
+    }
+    assert(e.getMessage.contains("TextDedupIndex.compactIndex"), e.getMessage)
+    assert(BandIndexFiles.snapshot(old) == before)
+    val migrated = java.nio.file.Files
+      .createTempDirectory("lsh_old_migrated").toString
+    TextDedupIndex.compactIndex(spark, old, migrated)
+    assert(BandIndexFiles.nestedDirs(migrated).isEmpty)
+    assert(!spark.read.parquet(migrated).columns.contains("bgroup"))
+    assert(pairs(migrated) == want)
+    // and the migrated index takes appends again
+    TextDedupIndex.admitBatch(batch, migrated)
+    assert(spark.read.parquet(migrated).count() ==
+      spark.read.parquet(fresh).count() +
+        TextDedupIndex.bandRows(batch, "doc_id", "text").count())
   }
 }

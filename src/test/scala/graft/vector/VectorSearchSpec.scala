@@ -155,7 +155,7 @@ class VectorSearchSpec extends SparkSpec {
     assert(maxFiles(incr) <= 2)
     val comp = java.nio.file.Files
       .createTempDirectory("lsh_admit_comp").toString
-    graft.io.Layout.compactPartitioned(spark, incr, comp,
+    graft.io.Layout.compactPartitioned(spark.read.parquet(incr), comp,
       Seq("lsh_bucket"), sortCols = Seq("id"))
     assert(maxFiles(comp) == 1 && content(comp) == content(full))
   }
